@@ -31,6 +31,7 @@ from raptor_rag_spark.operators.embed import embed_texts
 from raptor_rag_spark.operators.tree import build_tree, last_complete_level
 from raptor_rag_spark.operators.retrieve import (
     embed_queries,
+    question_rows,
     retrieve_collapsed,
     retrieve_traversal,
 )
@@ -181,11 +182,13 @@ class RaptorEngine:
     # -------------------------------------------------------- retrieve
 
     def _query_df(self, questions) -> DataFrame:
+        """Questions -> (query_id, text, q_embedding, x, y). A str/list
+        batch is embedded on the driver (question_rows); a DataFrame
+        batch stays distributed (embed_queries). Same values either way."""
         if isinstance(questions, str):
             questions = [questions]
         if isinstance(questions, list):
-            rows = [(i, q) for i, q in enumerate(questions)]
-            questions = local_df(self.spark, rows, "query_id long, text string")
+            return question_rows(self.spark, questions, self.dim)
         return embed_queries(questions, dim=self.dim)
 
     def retrieve(

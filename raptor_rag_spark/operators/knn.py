@@ -21,12 +21,13 @@ Two physical strategies over identical semantics:
    picked by AQE. Ring expansion: queries that end up with < k
    candidates retry with a wider ring (driver loop, geometrically rare).
 
-Distances: embeddings are unit-norm, so cosine distance = 1 - dot.
-The dot product is computed JVM-side (zip_with + aggregate in double
-precision) — no Python in the join hot path. Ordering ties break on
-node_id: np.argsort's default quicksort is NOT stable, so the
-reference's tie order is undefined; the engine pins (dist, node_id)
-total order (SURVEY.md §2.5 W1, documented deviation).
+Distances: embeddings are unit-norm, so cosine distance = 1 - dot,
+computed in double precision by one BLAS matmul per Arrow batch.
+Ordering ties break on node_id: np.argsort's default quicksort is NOT
+stable, so the reference's tie order is undefined; the engine pins
+(dist, node_id) total order (SURVEY.md §2.5 W1, documented deviation),
+and every per-batch partial top-k keeps all k-boundary ties
+(partial_topk) so that order holds however the nodes are batched.
 """
 
 from __future__ import annotations
@@ -43,20 +44,20 @@ from raptor_rag_spark.operators.tile import (
 )
 
 
-def dot_product(a: Column, b: Column) -> Column:
-    """double dot product of two array<float> columns, JVM-side."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def partial_topk(dists, k: int):
+    """(rows, cols) of every entry of ``dists`` (nq, n) that can reach
+    its row's global top-k: each column with dist <= the row's k-th
+    smallest. Keeping EVERY column tied at the k-th distance makes a
+    scoring batch's partial top-k independent of how the node table is
+    split into batches — an argpartition cut drops tied columns
+    arbitrarily, and the hash embedder makes exact ties common. The
+    exact (dist, node_id) order is applied afterwards (_rank_and_take).
+    """
+    import numpy as np
 
-
-def cosine_distance(a: Column, b: Column) -> Column:
-    """1 - cosine similarity, assuming unit-norm inputs (reference
-    stores normalized e5 vectors; FAISS IP == cosine there too,
-    FaissRetriever.py:181-185)."""
-    return F.lit(1.0) - dot_product(a, b)
+    take = min(k, dists.shape[1])
+    kth = np.partition(dists, take - 1, axis=1)[:, take - 1 : take]
+    return np.nonzero(dists <= kth)
 
 
 def _rank_and_take(
@@ -235,10 +236,7 @@ def _brute_force_knn_join(
         q_mat = vec_matrix(pdf["_emb"][q_sel], q_emb, "_brute_force_knn_join")
         n_mat = vec_matrix(pdf["_emb"][n_sel], n_emb, "_brute_force_knn_join", expect_dim=q_mat.shape[1] if q_mat.size else None)
         dists = 1.0 - q_mat @ n_mat.T  # (nq, nn)
-        take = min(k, dists.shape[1])
-        part = np.argpartition(dists, take - 1, axis=1)[:, :take]
-        rows_q = np.repeat(np.arange(len(q_ids)), take)
-        cols = part.reshape(-1)
+        rows_q, cols = partial_topk(dists, k)
         return pd.DataFrame(
             {
                 query_id: q_ids[rows_q],
@@ -308,18 +306,14 @@ def brute_force_knn(
 
     def score(it):
         ids, mat = b_ids.value, b_mat.value
-        nq = len(ids)
         for pdf in it:
             if not len(pdf):
                 continue
             n_ids = pdf[node_id].to_numpy(dtype=np.int64)
             n_mat = vec_matrix(pdf[n_emb], n_emb, "brute_force_knn", expect_dim=mat.shape[1])
             dists = 1.0 - mat @ n_mat.T  # (nq, batch)
-            take = min(k, dists.shape[1])
-            # per-batch partial top-k (argpartition then exact sort later)
-            part = np.argpartition(dists, take - 1, axis=1)[:, :take]
-            rows_q = np.repeat(np.arange(nq), take)
-            cols = part.reshape(-1)
+            # per-batch partial top-k (exact sort later)
+            rows_q, cols = partial_topk(dists, k)
             yield pd.DataFrame(
                 {
                     query_id: ids[rows_q],

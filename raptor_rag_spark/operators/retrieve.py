@@ -18,11 +18,11 @@ side).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
-from raptor_rag_spark.operators.embed import embed_texts
+from raptor_rag_spark.operators.embed import embed_texts, hash_embed_batch
 from raptor_rag_spark.operators.knn import (
     assemble_context,
     brute_force_knn,
@@ -30,13 +30,42 @@ from raptor_rag_spark.operators.knn import (
     tile_knn,
     token_budget_prefix,
 )
-from raptor_rag_spark.operators.tile import reduce_2d, tile_assignments
+from raptor_rag_spark.operators.tile import (
+    project_xy,
+    projection_matrix,
+    reduce_2d,
+    tile_assignments,
+)
 
 
 def embed_queries(queries: DataFrame, dim: int, text_col: str = "text") -> DataFrame:
     q = embed_texts(queries, text_col=text_col, dim=dim)
     q = reduce_2d(q, dim=dim)
     return q.withColumnRenamed("embedding", "q_embedding")
+
+
+def question_rows(spark: SparkSession, questions: list[str], dim: int) -> DataFrame:
+    """A driver-side question list -> the (query_id, text, q_embedding,
+    x, y) rows embed_queries computes, bit for bit: the same
+    hash_embed_batch and project_xy kernels, run on the driver.
+    An interactive batch is a handful of questions already in driver
+    memory; routing it through a local table and two Arrow UDFs paid
+    Python-worker round trips for microseconds of numpy. A DataFrame
+    of questions (the bulk path) stays distributed via embed_queries."""
+    import pandas as pd
+
+    from raptor_rag_spark.functions.localtab import local_df
+
+    emb = hash_embed_batch(pd.Series(questions, dtype=object), dim)
+    xy = project_xy(emb, projection_matrix(dim))
+    rows = [
+        (i, q, e, float(x), float(y))
+        for i, (q, e, (x, y)) in enumerate(zip(questions, emb, xy))
+    ]
+    return local_df(
+        spark, rows,
+        "query_id long, text string, q_embedding array<float>, x double, y double",
+    )
 
 
 def retrieve_collapsed(

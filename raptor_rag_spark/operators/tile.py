@@ -58,6 +58,17 @@ def projection_literals(dim: int, seed: int = DEFAULT_CONFIG.seed) -> tuple[list
     return [float(v) for v in m[0]], [float(v) for v in m[1]]
 
 
+def project_xy(mat: np.ndarray, proj: np.ndarray) -> np.ndarray:
+    """(n, dim) vectors -> (n, 2) float64 coordinates on ``proj``'s
+    rows. Each value is a multiply-and-sum over its own row only, so a
+    vector projects to the same bits in any batch. A BLAS matmul does
+    not: its last bit varies with the batch's row count and the row's
+    position in it, so the same vector got different x, y in different
+    Arrow batches. Every x, y in the engine comes from this kernel."""
+    mat = np.asarray(mat, dtype=np.float64)
+    return np.stack([(mat * p).sum(axis=1) for p in proj], axis=1)
+
+
 _XY_SCHEMA = T.StructType(
     [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]
 )
@@ -73,7 +84,7 @@ def make_reduce_udf(dim: int, seed: int = DEFAULT_CONFIG.seed):
             if mat.size == 0:
                 yield pd.DataFrame({"x": [], "y": []})
                 continue
-            xy = mat @ proj.T  # (n, 2) double matmul
+            xy = project_xy(mat, proj)
             yield pd.DataFrame({"x": xy[:, 0], "y": xy[:, 1]})
 
     return reduce_xy

@@ -368,8 +368,8 @@ def build_level(
     reduction (cfg.seed) INSIDE the same grouped kernel — one Python
     stage instead of three chained Arrow nodes (summarize ->
     embed_texts -> reduce_2d), with bit-identical outputs (the hash
-    embedder is batch-order-independent by construction and the
-    projection is the same float64 matmul reduce_2d runs). The tree
+    embedder and the projection kernel project_xy are both per-row, so
+    independent of batching). The tree
     build paths use this; the bare parent surface stays the default.
     """
     # tokenizer seam: parent n_tokens (and the extractive fallback's
@@ -390,7 +390,7 @@ def build_level(
     max_summary = cfg.summary_max_tokens
     if with_embedding:
         from raptor_rag_spark.operators.embed import hash_embed_batch
-        from raptor_rag_spark.operators.tile import projection_matrix
+        from raptor_rag_spark.operators.tile import project_xy, projection_matrix
 
         dim = embed_dim or cfg.embedding_dim
         proj = projection_matrix(dim, cfg.seed)  # small, ships in closure
@@ -411,7 +411,7 @@ def build_level(
         )
         if with_embedding:
             emb = hash_embed_batch(pd.Series([text]), dim)  # (1, dim) f32
-            xy = emb.astype("float64") @ proj.T  # = reduce_2d's matmul
+            xy = project_xy(emb, proj)  # = reduce_2d's kernel
             out["embedding"] = list(emb)
             out["x"] = xy[:, 0]
             out["y"] = xy[:, 1]
@@ -740,12 +740,18 @@ def build_tree(
         if n_parents <= cfg.min_level_nodes:
             break
 
-    levels = []
-    lvl = 0
-    while os.path.exists(_manifest_path(checkpoint_base, lvl)):
-        levels.append(read_level(spark, checkpoint_base, lvl))
-        lvl += 1
-    out = levels[0]
-    for more in levels[1:]:
-        out = out.unionByName(more)
-    return out
+    return read_collapsed(spark, checkpoint_base, last_complete_level(checkpoint_base))
+
+
+def read_collapsed(spark: SparkSession, base: str, top: int) -> DataFrame:
+    """The collapsed node table: union of levels 0..top, coalesced to
+    at most one partition per core. The union of per-level reads has
+    one partition per file split of every level (~16 on a 5k-node
+    tree), so each scan of the table — brute scoring, the tile join,
+    every traversal layer — paid a Python-worker task per split for a
+    few hundred rows each. coalesce only merges splits (no shuffle)
+    and is a no-op when the table already has that few partitions."""
+    out = read_level(spark, base, 0)
+    for layer in range(1, top + 1):
+        out = out.unionByName(read_level(spark, base, layer))
+    return out.coalesce(spark.sparkContext.defaultParallelism)

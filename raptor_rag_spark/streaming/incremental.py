@@ -201,6 +201,29 @@ def append_level(
     return manifest
 
 
+def _require_build_layout(base: str, start_resolution: int, top: int) -> None:
+    """Refuse, before anything is written, an update whose
+    ``start_resolution`` differs from the one the tree was built with.
+    Affected-cell maintenance recomputes whole start-res cells, and
+    build_tree writes each level >= 1 partitioned by exactly those
+    cells (``partition_prefix_len`` = the level's resolution + 1). A
+    different start_resolution tiles at other cells than the level's
+    partitions, so its recompute units would not be closed."""
+    from raptor_rag_spark.operators.tree import read_manifest
+
+    for layer in range(1, top + 1):
+        res = max(start_resolution - (layer - 1), 0)
+        man = read_manifest(base, layer)
+        if man.get("partitions_by") == "cell_pfx" and man.get("partition_prefix_len") == res + 1:
+            continue
+        built = read_manifest(base, 1).get("partition_prefix_len")
+        raise ValueError(
+            f"tree under {base!r} was built with start_resolution="
+            f"{built - 1 if built else 'unknown'}; incremental updates must use "
+            f"the same start_resolution (got {start_resolution})"
+        )
+
+
 def _propagate_affected(
     spark: SparkSession,
     checkpoint_base: str,
@@ -240,10 +263,8 @@ def _propagate_affected(
         read_level,
         read_manifest,
         read_level_pruned,
-        refresh_manifest,
         storage_partition_counts,
         update_manifest_delta,
-        write_level,
     )
 
     stats = {"recomputed_parents": 0, "replaced_parents": 0, "affected_cells_l1": 0}
@@ -280,95 +301,58 @@ def _propagate_affected(
             "node_id", "layer", "cell_id", "text", "children", "n_tokens",
             "embedding", "x", "y",
         )
-        old_manifest = read_manifest(checkpoint_base, layer)
-        pfx_len = old_manifest.get("partition_prefix_len")
-        prefix = F.substring("cell_id", 1, res + 1)
-        # pinned BEFORE the overwrite below: this plan reads the very
-        # files being replaced. Partition-pruned on the affected dirs
-        # when the layout allows (the affected cells ARE this level's
-        # partitions), else scan + row filter.
-        if old_manifest.get("partitions_by") == "cell_pfx" and pfx_len == res + 1:
-            replaced_src = read_level_pruned(
-                spark, checkpoint_base, layer, affected
-            )
-        else:
-            replaced_src = read_level(spark, checkpoint_base, layer).filter(
-                prefix.isin(affected)
-            )
-        replaced = replaced_src.select("node_id", "x", "y").localCheckpoint(
-            eager=True
+        # every level >= 1 is cell_pfx-partitioned at this resolution
+        # (_require_build_layout): the affected start-res cells ARE its
+        # partitions. Pinned BEFORE the overwrite below, which replaces
+        # the very files this partition-pruned read lists.
+        replaced = (
+            read_level_pruned(spark, checkpoint_base, layer, affected)
+            .select("node_id", "x", "y")
+            .localCheckpoint(eager=True)
         )
-        if old_manifest.get("partitions_by") == "cell_pfx" and pfx_len == res + 1:
-            # manifest partition counts are exact (footer-derived and
-            # append-free at levels >= 1): the replaced-parents count is
-            # plain arithmetic, no counting job
-            parts = old_manifest.get("partitions", {})
-            n_replaced = int(sum(int(parts.get(c, 0)) for c in affected))
-        else:
-            n_replaced = int(replaced.count())
+        # manifest partition counts are exact (footer-derived and
+        # append-free at levels >= 1): the replaced-parents count is
+        # plain arithmetic, no counting job
+        parts = read_manifest(checkpoint_base, layer).get("partitions", {})
+        n_replaced = int(sum(int(parts.get(c, 0)) for c in affected))
         lineage = {
             "input": "incremental",
             "resolution": res,
             "affected_cells": len(affected),
+            # dynamic partition overwrite rewrites ONLY the affected
+            # directories; kept rows are never read or written (the
+            # 100 TB maintenance path)
+            "write": "dynamic-partition-overwrite",
         }
-        if pfx_len == res + 1:
-            # prefix-partitioned level: affected start-res cells ARE
-            # partitions — dynamic partition overwrite rewrites ONLY
-            # those directories; kept rows are never read or written
-            # (the 100 TB maintenance path).
-            lineage["write"] = "dynamic-partition-overwrite"
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            (
+                recomputed.withColumn("cell_pfx", F.substring("cell_id", 1, res + 1))
+                .write.mode("overwrite")
+                .partitionBy("cell_pfx")
+                .parquet(_level_path(checkpoint_base, layer))
             )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    recomputed.withColumn(
-                        "cell_pfx", F.substring("cell_id", 1, res + 1)
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy("cell_pfx")
-                    .parquet(_level_path(checkpoint_base, layer))
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            # O(affected) footer walk of the just-written dirs — the
-            # recomputed counts without a counting job
-            all_counts = storage_partition_counts(
-                _level_path(checkpoint_base, layer), True
-            )
-            rec_counts = {c: all_counts.get(c, 0) for c in affected}
-            n_recomputed = int(sum(rec_counts.values()))
-            lineage["recomputed_parents"] = n_recomputed
-            lineage["replaced_parents"] = n_replaced
-            if old_manifest.get("partitions_by") == "cell_pfx":
-                # O(affected) manifest update — no level rescan
-                update_manifest_delta(
-                    checkpoint_base, layer, affected,
-                    {k: v for k, v in rec_counts.items() if v}, lineage,
-                )
-            else:  # legacy manifest (partition-id keyed): refresh once
-                refresh_manifest(spark, checkpoint_base, layer, lineage, pfx_len)
-            # the written partitions ARE the recomputed rows: read them
-            # back partition-pruned for the next level's delta instead
-            # of holding a checkpoint
-            recomputed_rb = read_level_pruned(
-                spark, checkpoint_base, layer, affected
-            ).select("node_id", "x", "y")
-        else:
-            recomputed = recomputed.localCheckpoint(eager=True)
-            n_recomputed = int(recomputed.count())
-            lineage["recomputed_parents"] = n_recomputed
-            lineage["replaced_parents"] = n_replaced
-            # coalesce: a NULL prefix must stay kept (the old anti-join
-            # semantics — NULL never matched)
-            kept = old.filter(F.coalesce(~prefix.isin(affected), F.lit(True)))
-            merged = kept.unionByName(recomputed).localCheckpoint(eager=True)
-            write_level(
-                merged, checkpoint_base, layer, lineage,
-                partition_prefix_len=pfx_len,
-            )
-            recomputed_rb = recomputed.select("node_id", "x", "y")
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # O(affected) footer walk of the just-written dirs — the
+        # recomputed counts without a counting job
+        all_counts = storage_partition_counts(_level_path(checkpoint_base, layer), True)
+        rec_counts = {c: all_counts.get(c, 0) for c in affected}
+        n_recomputed = int(sum(rec_counts.values()))
+        lineage["recomputed_parents"] = n_recomputed
+        lineage["replaced_parents"] = n_replaced
+        # O(affected) manifest update — no level rescan
+        update_manifest_delta(
+            checkpoint_base, layer, affected,
+            {k: v for k, v in rec_counts.items() if v}, lineage,
+        )
+        # the written partitions ARE the recomputed rows: read them
+        # back partition-pruned for the next level's delta instead of
+        # holding a checkpoint
+        recomputed_rb = read_level_pruned(
+            spark, checkpoint_base, layer, affected
+        ).select("node_id", "x", "y")
         stats["recomputed_parents"] += n_recomputed
         stats["replaced_parents"] += n_replaced
         # both the new and the vanished/updated parents perturb level+1
@@ -399,11 +383,11 @@ def incremental_update(
     4. the changed-parent set becomes the next level's delta.
 
     Level 0 is an APPEND (immutable data files + manifest delta);
-    levels >= 1 rewrite the level file with kept ∪ recomputed rows —
-    the summarize/embed work (the expensive part) runs only on affected
-    cells; at production scale the level files would be partitioned by
-    cell prefix so the rewrite too touches only affected partitions
-    (levels above 0 are already compression-ratio smaller than leaves).
+    levels >= 1 are partitioned by start-res cell prefix, so only the
+    affected partitions are rewritten (dynamic partition overwrite) and
+    the summarize/embed work runs only on affected cells. The update
+    must use the tree's build ``start_resolution`` (ValueError
+    otherwise, before any write).
     Finishes with a resumed build_tree to extend the top if the append
     pushed the top level back over min_level_nodes; returns the
     collapsed node table. Result equals a from-scratch build over the
@@ -441,6 +425,7 @@ def incremental_update(
             start_resolution=start_resolution, max_layers=max_layers,
             embed_dim=dim, force_flush=True,
         )
+    _require_build_layout(checkpoint_base, start_resolution, top)
 
     lvl0_delta, _aid = _stage_level0_append(new_leaves, checkpoint_base)
 
@@ -538,16 +523,6 @@ def has_pending_ledger(base: str) -> bool:
     return os.path.exists(_pending_path(base))
 
 
-def _read_collapsed(spark: SparkSession, base: str, top: int) -> DataFrame:
-    """The collapsed node table: union of every checkpointed level."""
-    from raptor_rag_spark.operators.tree import read_level
-
-    out = read_level(spark, base, 0)
-    for layer in range(1, top + 1):
-        out = out.unionByName(read_level(spark, base, layer))
-    return out
-
-
 def read_pending(base: str) -> dict:
     """The append planner's ledger: per-base-cell pending-leaf counts
     (leaves already in level 0 whose parents have NOT been recomputed),
@@ -634,6 +609,7 @@ def incremental_update_planned(
     from raptor_rag_spark.operators.tree import (
         build_tree,
         last_complete_level,
+        read_collapsed,
         read_level,
     )
 
@@ -645,6 +621,7 @@ def incremental_update_planned(
     top = last_complete_level(checkpoint_base)
     if top < 0:
         raise ValueError(f"no complete levels under {checkpoint_base}; build first")
+    _require_build_layout(checkpoint_base, start_resolution, top)
 
     ledger = read_pending(checkpoint_base)
     if ledger["resolution"] is None:
@@ -654,7 +631,7 @@ def incremental_update_planned(
             # seeding scan (a defensive flush_appends() on an engine
             # that never deferred must not pay an O(level-0) job) and
             # return the collapsed table as-is
-            return _read_collapsed(spark, checkpoint_base, top)
+            return read_collapsed(spark, checkpoint_base, top)
         ledger["resolution"] = int(start_resolution)
         # one-time size seed: per-base-cell leaf counts of the existing
         # level 0 (bounded by the base-cell universe; incremented per
@@ -712,7 +689,7 @@ def incremental_update_planned(
     if not due:
         # no flush: collapsed table with up-to-date leaves and
         # bounded-stale parents
-        return _read_collapsed(spark, checkpoint_base, top)
+        return read_collapsed(spark, checkpoint_base, top)
 
     stats = _propagate_affected(
         spark, checkpoint_base, cfg, start_resolution, top, dim,

@@ -367,3 +367,46 @@ def test_eager_append_after_deferred_settles_ledger(spark, tmp_path):
     assert sorted(map(tuple, eng.nodes.select(*cols).collect())) == sorted(
         map(tuple, eager.nodes.select(*cols).collect())
     )
+
+
+def test_node_table_has_at_most_one_partition_per_core(spark, tmp_path_factory):
+    """The engine's cached node table is read_collapsed: the union of
+    the level reads coalesced to defaultParallelism, after a build,
+    both append modes and a reopen."""
+    from raptor_rag_spark.datagen import synthetic_pages
+
+    cap = spark.sparkContext.defaultParallelism
+    base = str(tmp_path_factory.mktemp("api_compact"))
+    eng = RaptorEngine(spark, base, CFG, embed_dim=32, start_resolution=3)
+    pages = synthetic_pages(spark, n=96, seed=11).select(
+        F.col("page_id").alias("doc_id"), "text"
+    )
+    eng.add_documents(pages.filter(F.col("doc_id") < 60))
+    assert eng.nodes.rdd.getNumPartitions() <= cap
+    eng.append_documents(pages.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 72)))
+    assert eng.nodes.rdd.getNumPartitions() <= cap
+    eng.append_documents(pages.filter(F.col("doc_id") >= 72), deferred=True)
+    assert eng.nodes.rdd.getNumPartitions() <= cap
+    reopened = RaptorEngine(spark, base, CFG, embed_dim=32, start_resolution=3)
+    assert reopened.nodes.rdd.getNumPartitions() <= cap
+    assert reopened.nodes.count() == eng.nodes.count()
+
+
+def test_driver_embedded_questions_equal_embed_queries(spark):
+    """str/list questions are embedded on the driver (question_rows);
+    their rows must equal embed_queries' bit for bit, whatever Arrow
+    batches the distributed path splits the questions into."""
+    from raptor_rag_spark.functions.localtab import local_df
+    from raptor_rag_spark.operators.retrieve import embed_queries, question_rows
+
+    qs = [
+        "berber dukkani", "data processing shuffle", "", "veri isleme",
+        "the quick brown fox jumps over the lazy dog", "a b c",
+    ] * 4
+    want_df = question_rows(spark, qs, 32)
+    rows = local_df(spark, list(enumerate(qs)), "query_id long, text string")
+    for parts in (1, 5):
+        got_df = embed_queries(rows.repartition(parts), dim=32)
+        assert got_df.schema == want_df.schema
+        got = sorted((tuple(r) for r in got_df.collect()), key=lambda r: r[0])
+        assert got == [tuple(r) for r in want_df.collect()]

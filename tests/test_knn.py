@@ -275,3 +275,42 @@ def test_null_and_ragged_embeddings_fail_loudly(spark, strategy):
         brute_force_knn(q, bad_null, k=2, strategy=strategy).collect()
     with pytest.raises(Exception, match="ragged|expected"):
         brute_force_knn(q, bad_ragged, k=2, strategy=strategy).collect()
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "join"])
+def test_brute_force_keeps_k_boundary_ties_across_partitionings(spark, strategy):
+    """40 nodes over 4 distinct unit vectors: every query's k-th
+    distance is tied by up to 10 nodes. The per-batch partial top-k
+    must keep all of them, so the result is the exact (dist, node_id)
+    order however the node table is partitioned."""
+    basis = np.eye(8, dtype=np.float32)[:4]
+    ids = np.sort(np.random.RandomState(3).choice(1000, 40, replace=False))
+    nodes = spark.createDataFrame(
+        [(int(i), basis[j % 4].tolist()) for j, i in enumerate(ids)],
+        "node_id long, embedding array<float>",
+    )
+    qv = np.array(
+        [[0.9, 0.3, 0.2, 0.1, 0, 0, 0, 0], [0.1, 0.2, 0.3, 0.9, 0, 0, 0, 0]],
+        dtype=np.float32,
+    )
+    queries = spark.createDataFrame(
+        [(qi, v.tolist()) for qi, v in enumerate(qv)],
+        "query_id long, q_embedding array<float>",
+    )
+    nv = basis[np.arange(40) % 4].astype(np.float64)
+    dists = 1.0 - qv.astype(np.float64) @ nv.T
+    want = {
+        qi: [int(ids[j]) for j in np.lexsort((ids, dists[qi]))[:5]]
+        for qi in range(len(qv))
+    }
+    for n in (1, 3, 7):
+        rows = brute_force_knn(
+            queries, nodes.repartition(n), k=5, strategy=strategy
+        ).collect()
+        got = {
+            qi: [r["node_id"] for r in sorted(
+                (r for r in rows if r["query_id"] == qi), key=lambda r: r["rank"]
+            )]
+            for qi in range(len(qv))
+        }
+        assert got == want, (n, got, want)

@@ -330,3 +330,16 @@ def test_score_candidates_join_plans_hash_join(spark):
     plan = _plan(out)
     assert "CartesianProduct" not in plan.replace("CartesianProduct", "", 1), plan  # only the test's own crossJoin
     assert ("ShuffledHashJoin" in plan or "SortMergeJoin" in plan or "BroadcastHashJoin" in plan), plan
+
+
+def test_bare_scan_check_refuses_python_operators(spark):
+    """A local table is a bare scan; one pandas-UDF projection over it
+    is not (every re-scan re-runs the UDF), nor is a mapInPandas."""
+    from raptor_rag_spark.functions.localtab import local_df
+    from raptor_rag_spark.functions.planutil import plan_is_bare_scan
+    from raptor_rag_spark.operators.embed import embed_texts
+
+    rows = local_df(spark, [(0, "alpha beta"), (1, "gamma")], "doc_id long, text string")
+    assert plan_is_bare_scan(rows)
+    assert not plan_is_bare_scan(embed_texts(rows, dim=8))
+    assert not plan_is_bare_scan(rows.mapInPandas(lambda it: it, rows.schema))

@@ -210,3 +210,29 @@ def test_cap_assign_start_res_beyond_max_resolution(spark):
     out = _assign_cells_with_cap(nodes, start_res=8, cfg=cfg).collect()
     assert len(out) == 8
     assert all(r["resolution"] == 8 and len(r["cell_id"]) == 9 for r in out)
+
+
+def test_incremental_update_rejects_other_start_resolution(spark, leaves, tmp_path_factory):
+    """A tree built with start_resolution=3 is partitioned by res-3
+    cells; an update at 4 must fail with a clear ValueError before it
+    writes anything (it used to die on an unbound name mid-update)."""
+    from raptor_rag_spark.operators.tile import reduce_2d
+    from raptor_rag_spark.operators.tree import read_manifest
+    from raptor_rag_spark.streaming.incremental import (
+        incremental_update,
+        incremental_update_planned,
+        read_pending,
+    )
+
+    base = str(tmp_path_factory.mktemp("tree_res_mismatch"))
+    build_tree(
+        spark, leaves.filter(F.col("node_id") % 5 != 0), base, CFG,
+        start_resolution=3, embed_dim=32,
+    )
+    before = read_manifest(base, 0)
+    new_xy = reduce_2d(leaves.filter(F.col("node_id") % 5 == 0), dim=32, seed=CFG.seed)
+    for update in (incremental_update, incremental_update_planned):
+        with pytest.raises(ValueError, match="start_resolution=3.*got 4"):
+            update(spark, base, new_xy, CFG, start_resolution=4, embed_dim=32)
+    assert read_manifest(base, 0) == before
+    assert read_pending(base)["resolution"] is None
